@@ -132,7 +132,9 @@ object Dedup {
     * re-shingles and re-hashes the full reference every run, untenable
     * when the reference is 100 TB and the batch is a day's crawl).
     * Band rows ride partitioned by `band_idx` (16 independent
-    * band-parallel sub-indexes). */
+    * band-parallel sub-indexes), written through the cell-partitioned
+    * writer ([[graft.sim.CellStore.writeByCell]]) keyed on `band_idx`:
+    * one file per band, not one per write task per band. */
   def saveLshIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, numPerm: Int = 64, bands: Int = 16, rows: Int = 4): Unit = {
     requireBandGeometry(numPerm, bands, rows)
@@ -142,9 +144,8 @@ object Dedup {
     // band from the WRITTEN signatures: one signature computation total,
     // and the two files are guaranteed consistent
     val persisted = spark.read.parquet(s"$path/sigs")
-    bandKeys(persisted, idCol, bands, rows)
-      .select(col(idCol), col("band_idx"), col("band_hash"))
-      .write.partitionBy("band_idx").mode("overwrite").parquet(s"$path/bands")
+    writeBands(bandKeys(persisted, idCol, bands, rows), idCol, path,
+      org.apache.spark.sql.SaveMode.Overwrite)
     // hash-family parameters ride WITH the index: probing with different
     // ones computes band hashes over different signature slices and
     // silently finds (almost) nothing — a total dedup miss, not an error
@@ -154,7 +155,7 @@ object Dedup {
   }
 
   /** Incremental index maintenance — the LSH twin of
-    * [[graft.sim.IvfIndex.append]]: after a batch has been screened by
+    * [[graft.sim.CellStore.append]]: after a batch has been screened by
     * [[probeLshIndex]], fold its survivors INTO the index (signatures +
     * band keys appended under the stored hash-family parameters) so the
     * next batch dedups against them too — no recompute, no rewrite of
@@ -162,17 +163,30 @@ object Dedup {
     * append the kept docs. */
   def appendToLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, textCol: String, idCol: String): Unit = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (numPerm, bands, rows) = (meta.getAs[Int]("num_perm"),
-      meta.getAs[Int]("bands"), meta.getAs[Int]("rows"))
-    requireBandGeometry(numPerm, bands, rows)
+    val (numPerm, bands, rows) = readBandGeometry(spark, path)
     val sigs = graft.plans.LeafPlanRegistry.record(
         minHashSignatures(newDocs, textCol, idCol, numPerm))
       .localCheckpoint() // one signature pass feeds both files
     sigs.write.mode("append").parquet(s"$path/sigs")
-    bandKeys(sigs, idCol, bands, rows)
-      .select(col(idCol), col("band_idx"), col("band_hash"))
-      .write.partitionBy("band_idx").mode("append").parquet(s"$path/bands")
+    writeBands(bandKeys(sigs, idCol, bands, rows), idCol, path,
+      org.apache.spark.sql.SaveMode.Append)
+  }
+
+  private def writeBands(keys: DataFrame, idCol: String, path: String,
+      mode: org.apache.spark.sql.SaveMode): Unit =
+    graft.sim.CellStore.writeByCell(
+      keys.select(col(idCol), col("band_idx"), col("band_hash")),
+      s"$path/bands", mode, cellCol = "band_idx")
+
+  /** The hash-family parameters stored with an index, checked — every
+    * reader of a persisted index goes through here. */
+  private def readBandGeometry(spark: org.apache.spark.sql.SparkSession,
+      path: String): (Int, Int, Int) = {
+    val meta = spark.read.parquet(s"$path/meta").head()
+    val (numPerm, bands, rows) = (meta.getAs[Int]("num_perm"),
+      meta.getAs[Int]("bands"), meta.getAs[Int]("rows"))
+    requireBandGeometry(numPerm, bands, rows)
+    (numPerm, bands, rows)
   }
 
   /** Probe a [[saveLshIndex]] index with a new batch: candidates are
@@ -193,10 +207,7 @@ object Dedup {
   private def prepareProbe(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, textCol: String,
       idCol: String): ProbePrep = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (numPerm, bands, rows) = (meta.getAs[Int]("num_perm"),
-      meta.getAs[Int]("bands"), meta.getAs[Int]("rows"))
-    requireBandGeometry(numPerm, bands, rows)
+    val (numPerm, bands, rows) = readBandGeometry(spark, path)
     val refBands = spark.read.parquet(s"$path/bands")
     val refSigs = spark.read.parquet(s"$path/sigs")
     // small by contract (one batch); materialize once — bands and the
@@ -451,17 +462,6 @@ object Dedup {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
-  }
-
-  /** q119's per-process index paths, each registered once for
-    * delete-on-exit (a fresh JVM per bench/verify run would otherwise
-    * leak one index copy per invocation into the temp dir). */
-  private val q119CleanupPaths = scala.collection.mutable.HashSet.empty[String]
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(); ()
   }
 
   /** SimHash as a table: explode tokens → 64 codegen'd ±1 sums with
@@ -1752,10 +1752,7 @@ object Dedup {
         java.lang.ProcessHandle.current().pid()
       // per-process paths would otherwise leak one index copy per JVM
       // (every bench/verify invocation is a fresh pid) — delete on exit
-      q119CleanupPaths.synchronized {
-        if (q119CleanupPaths.add(path)) Runtime.getRuntime.addShutdownHook(
-          new Thread(() => deleteRecursively(new java.io.File(path))))
-      }
+      graft.LocalDirs.deleteOnExit(path)
       saveLshIndex(docs.filter(col("doc_id") % 10 =!= 0), "text", "doc_id", path)
       probeLshIndex(s, path, docs.filter(col("doc_id") % 10 === 0),
           "text", "doc_id", threshold = 0.3)

@@ -3,8 +3,8 @@ package graft.pipeline
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.LocalDirs
 
 /** Versioned publish / view switch / retention GC (SURVEY.md §2.E).
   *
@@ -72,12 +72,11 @@ object Publish {
   def listVersions(root: String, table: String): Seq[String] = {
     val dir = tableDir(root, table)
     if (!Files.isDirectory(dir)) Seq.empty
-    else Files.list(dir).iterator.asScala
+    else LocalDirs.list(dir)
       .map(_.getFileName.toString)
       .filter(_.startsWith("v="))
       .map(_.stripPrefix("v="))
       .filter(v => VersionPattern.pattern.matcher(v).matches)
-      .toSeq
   }
 
   /** E3/D11 view switch: atomically repoint CURRENT (write-temp + ATOMIC_MOVE
@@ -120,16 +119,11 @@ object Publish {
     * current + 1 backup, `CopyTool.java:578-580`), never delete the
     * published one. Returns dropped versions. */
   def gcOldVersions(root: String, table: String, keep: Int = 2): Seq[String] = {
-    val keepSet = listVersions(root, table).sorted(Ordering[String].reverse)
+    val versions = listVersions(root, table)
+    val keepSet = versions.sorted(Ordering[String].reverse)
       .take(keep).toSet ++ currentVersion(root, table).toSet
-    val drop = listVersions(root, table).filterNot(keepSet.contains)
-    drop.foreach { v =>
-      def rm(p: Path): Unit = {
-        if (Files.isDirectory(p)) Files.list(p).iterator.asScala.toSeq.foreach(rm)
-        Files.deleteIfExists(p)
-      }
-      rm(Paths.get(snapshotDir(root, table, v)))
-    }
+    val drop = versions.filterNot(keepSet.contains)
+    drop.foreach(v => LocalDirs.deleteRecursively(Paths.get(snapshotDir(root, table, v))))
     drop.sorted
   }
 
@@ -143,11 +137,7 @@ object Publish {
     val tmp = dir.resolve("tmp_data")
     val fin = dir.resolve("data")
     df.write.mode("overwrite").parquet(tmp.toString)
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) Files.list(p).iterator.asScala.toSeq.foreach(rm)
-      Files.deleteIfExists(p)
-    }
-    rm(fin)
+    LocalDirs.deleteRecursively(fin)
     Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, trim}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import graft.LocalDirs
 
 /** Durable staging between extract and load (SURVEY.md §2.B, §2.F3).
   *
@@ -79,13 +80,5 @@ object Staging {
     spark.read.parquet(dataPath(dir))
 
   /** E7 staging cleanup. */
-  def cleanup(dir: String): Unit = {
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p))
-        Files.list(p).forEach(rm)
-      Files.deleteIfExists(p)
-    }
-    val p = Paths.get(dir)
-    if (Files.exists(p)) rm(p)
-  }
+  def cleanup(dir: String): Unit = LocalDirs.deleteRecursively(Paths.get(dir))
 }

@@ -17,7 +17,9 @@ import graft.functions.VectorFunctions.vec_dot
   * (|c|² − 2q·c, computed with the codegen'd [[graft.functions.VectorDot]]),
   * keeps the best `nprobe` cells, and scans only those cells —
   * corpus-fraction ≈ nprobe/nlist per query. Centroids are tiny and
-  * broadcast; the cell join is the only shuffle.
+  * broadcast; the cell join is the only shuffle. The scan, the persisted
+  * layout and its append live in [[CellStore]], shared with IVF∘PQ and
+  * IVF∘SQ8.
   */
 object IvfIndex {
 
@@ -142,8 +144,8 @@ object IvfIndex {
 
   /** The persisted float centroid relation as the double matrix the
     * assignment expression wants — index == cell (rows are dense
-    * 0..nlist-1 by construction). Shared by both append paths so the
-    * IVF and IVF∘PQ layouts can never drift on assignment discipline. */
+    * 0..nlist-1 by construction). [[CellStore.append]] assigns arriving
+    * vectors with it under the persisted centroids. */
   private[sim] def centroidMatrix(centroids: DataFrame): Array[Array[Double]] =
     centroids.orderBy("cell").collect()
       .map(r => r.getSeq[Float](r.fieldIndex("centroid")).map(_.toDouble).toArray)
@@ -170,86 +172,22 @@ object IvfIndex {
   }
 
   /** Per-query probe set: the `nprobe` nearest centroids by exact
-    * Euclidean distance (|c|² − 2q·c, codegen'd dot products). Shared
-    * with [[PqIndex]]'s composed IVF∘PQ search, hence the (float)
-    * centroids relation rather than a full [[Model]]. */
+    * Euclidean distance (|c|² − 2q·c, codegen'd dot products). Takes
+    * the (float) centroids relation rather than a full [[Model]], so
+    * in-memory, persisted and residual searches share it. */
   private[sim] def probesFor(centroids: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, nprobe: Int): DataFrame =
     probeRanks(centroids, queries, idCol, vecCol)
       .filter(col("probe_rank") <= nprobe)
       .select("query_id", "q_vec", "cell")
 
-  private def topKInProbedCells(cells: DataFrame, probes: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val wTop = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(probes)
-      .join(cells.withColumnRenamed(idCol, "neighbor_id"), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Similarity.cosine(col("q_vec"), col(vecCol)))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-  }
-
   /** Top-k cosine neighbors per query, probing `nprobe` cells. */
   def search(model: Model, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int): DataFrame =
-    topKInProbedCells(model.cells, probesFor(model.centroids, queries, idCol, vecCol, nprobe),
-      idCol, vecCol, k)
-
-  /** Persist the index as parquet PARTITIONED BY cell: at scale the
-    * "index" is just a directory layout, and a probe becomes a
-    * partition-pruned scan that never opens the other cells' files.
-    *
-    * See [[writeByCell]] for the file-per-cell discipline every
-    * cell-partitioned write in this package shares. */
-  def save(model: Model, path: String): Unit = {
-    writeByCell(model.cells, s"$path/cells", org.apache.spark.sql.SaveMode.Overwrite)
-    model.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** THE cell-partitioned write, shared by every IVF/IVF∘PQ layout
-    * writer so none can lose the discipline independently: the
-    * `repartition(cell)` before `partitionBy` is load-bearing at scale —
-    * cell assignment is a map stage over corpus splits, so every write
-    * task holds rows of ~every cell and a bare `partitionBy` would emit
-    * one file PER TASK PER CELL, tasks × nlist files (measured: 45,248
-    * files for 2M vectors / nlist=1414 / 32 tasks; at 10k tasks × 65k
-    * cells a dead filesystem). One shuffle keyed on `cell` lands each
-    * cell wholly inside one task → exactly one file per cell
-    * (spec-pinned in IvfIndexSpec). */
-  private[sim] def writeByCell(df: DataFrame, path: String,
-      mode: org.apache.spark.sql.SaveMode): Unit =
-    df.repartition(col("cell"))
-      .write.partitionBy("cell").mode(mode).parquet(path)
-
-  def load(spark: SparkSession, path: String): Model = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    Model(spark.read.parquet(s"$path/cells"), centroids, centroids.count().toInt)
-  }
-
-  /** Incremental index maintenance: assign NEW vectors to their nearest
-    * cell under the EXISTING centroids and append them to the
-    * cell-partitioned layout — no retraining, no rewrite of the standing
-    * corpus (at a 100 TB embedding store, rebuilding the index per
-    * arriving batch is a non-starter; this is FAISS's `add` in directory
-    * form). Appended vectors are immediately visible to
-    * [[searchIndexed]] through the same partition-pruned scans. The
-    * quantizer slowly staleness-drifts as the distribution moves — the
-    * standard IVF trade; retrain with [[build]] when recall decays. */
-  def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val model = load(spark, path)
-    val centroids = centroidMatrix(model.centroids)
-    writeByCell(
-      newVectors.filter(col(vecCol).isNotNull)
-        .select(col(idCol), col(vecCol),
-          assignExpr(col(vecCol), centroids).as("cell")),
-      s"$path/cells", org.apache.spark.sql.SaveMode.Append)
-  }
+    CellStore.search(model, CellStore.Raw, queries, idCol, vecCol, k, nprobe)
 
   /** Cell-occupancy statistics of a PERSISTED index — the maintenance
-    * advisor's input ([[append]] adds vectors under frozen centroids
+    * advisor's input ([[CellStore.append]] adds vectors under frozen centroids
     * forever, so a drifting corpus silently concentrates into few cells
     * and recall decays with no error anywhere). ONE row out:
     * `(nlist, n_vecs, n_empty_cells, max_cell, max_cell_frac,
@@ -303,27 +241,4 @@ object IvfIndex {
       imbalanceThreshold: Double = 1.5): Boolean =
     occupancyStats(spark, path).head().getAs[Double]("imbalance") >
       imbalanceThreshold
-
-  /** Search a persisted index with STATIC partition pruning: the union of
-    * all queries' probe cells (≤ nlist values, independent of query
-    * count) is collected and pushed as a literal IN filter, so the
-    * parquet scan lists only the probed cell directories — the
-    * 100 TB path where nprobe/nlist of the corpus is read, verifiable as
-    * `PartitionFilters` in the plan. */
-  def searchIndexed(spark: SparkSession, path: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val model = load(spark, path)
-    val probesPlan = probesFor(model.centroids, queries, idCol, vecCol, nprobe)
-    // materialize the probe set driver-side ONCE — it is bounded by
-    // |queries| × nprobe (the probe side is broadcast anyway, so queries
-    // are small by contract) and feeds both the static IN filter and the
-    // broadcast join input; a local list avoids the persist-without-
-    // unpersist leak a cached two-consumer plan would carry
-    val probeRows = probesPlan.collect()
-    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val pruned = model.cells.filter(col("cell").isin(probedCells.map(Int.box): _*))
-    topKInProbedCells(pruned, probes, idCol, vecCol, k)
-  }
 }

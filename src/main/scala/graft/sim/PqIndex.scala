@@ -168,7 +168,7 @@ object PqIndex {
     * rank-equivalent Euclidean form (the `|q_j|²` constant per query is
     * dropped, exactly like [[IvfIndex]]'s probe distance), fixed-pointed
     * per SUBSPACE so the per-pair total is an exact long sum. */
-  private def dtabFp(cb: Codebook, qVec: Column): Column =
+  private[sim] def dtabFp(cb: Codebook, qVec: Column): Column =
     // one reference-object expression ([[graft.functions.PqDistTable]])
     // instead of m·ksub floor/vec_dot/literal subtrees (~1300 plan nodes
     // at m=8/ksub=16) — same arithmetic, term for term
@@ -179,7 +179,7 @@ object PqIndex {
     * ([[graft.functions.PqAdcDist]]); the zip_with/aggregate fold it
     * replaces interprets two lambdas per pair on the corpus × query
     * hot path (the SqAdcDist 8× lesson). */
-  private def adcDistCol(cb: Codebook): Column =
+  private[sim] def adcDistCol(cb: Codebook): Column =
     pq_adc_dist(col("codes"), col("dtab"), cb.ksub)
 
   /** Per-query top-k over `(query_id, neighbor_id, adist_fp)` rows.
@@ -306,11 +306,11 @@ object PqIndex {
         .select("query_id", "neighbor_id"),
       corpus, queries, idCol, vecCol, k)
 
-  /** THE exact-cosine re-rank stage, shared by both two-stage serves:
+  /** THE exact-cosine re-rank stage, shared by every two-stage serve:
     * full vectors are fetched for just |queries| × shortlist rows via an
     * equi join with the BROADCAST shortlist, so the vector store is
     * scanned once and never shuffled. */
-  private[sim] def rerankExact(short: DataFrame, corpus: DataFrame,
+  private[graft] def rerankExact(short: DataFrame, corpus: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val nv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"))
@@ -625,116 +625,13 @@ object PqIndex {
         .withColumn("adist_fp", adcDistCol(cb) + col("qnorm_fp")), k)
   }
 
-  /** The persisted-index form of the two-stage serve: ADC shortlist from
-    * the partition-pruned [[searchIndexedIvfAdc]] scan, then
-    * [[rerankExact]] against the full-vector `corpus` relation — the
-    * complete production read path (pruned code files for candidates,
-    * one corpus-side fetch for exactly |queries| × shortlist vectors). */
-  def searchIndexedIvfAdcRerank(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nprobe: Int, shortlist: Int): DataFrame =
-    rerankExact(
-      searchIndexedIvfAdc(spark, path, queries, idCol, vecCol, shortlist, nprobe)
-        .select("query_id", "neighbor_id"),
-      corpus, queries, idCol, vecCol, k)
-
-  /** The shared IVF∘PQ scan: probe rows (query_id, q_vec, cell) carry
-    * their ADC table into an equi join on `cell`, so each query reads
-    * ONLY its probed cells' code rows — corpus fraction ≈ nprobe/nlist,
-    * and of that only the m-byte code column. */
-  private def adcOverCells(cellCodes: DataFrame, cb: Codebook,
-      probes: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(probes.select(col("query_id"), col("cell"),
-      dtabFp(cb, col("q_vec")).as("dtab")))
-    topKByAdc(
-      cellCodes.join(q, Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("adist_fp", adcDistCol(cb)), k)
-  }
-
   /** IVF∘PQ search (FAISS `IndexIVFPQ` with `by_residual=false`): the
     * coarse quantizer picks `nprobe` cells per query, PQ codes pay the
     * per-pair cost. The two stages compose without re-touching the
     * corpus: codes are computed from the cells relation in the same
-    * map stage that the cell assignment already produced. */
+    * map stage that the cell assignment already produced. Persist with
+    * [[CellStore.save]] under `CellStore.Pq(cb)`. */
   def searchIvfAdc(ivf: IvfIndex.Model, cb: Codebook, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val cellCodes = ivf.cells.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("neighbor_id"), col("cell"),
-        codesExpr(cb, col(vecCol)).as("codes"))
-    adcOverCells(cellCodes, cb,
-      IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe), k)
-  }
-
-  /** Persist the composed index: PQ codes partitioned by IVF cell (the
-    * 100 TB layout — a probe is a partition-pruned scan over files
-    * 16-32× smaller than the vectors they stand for), plus the coarse
-    * centroids and the codebook (both KiB). */
-  def saveIvfPq(ivf: IvfIndex.Model, cb: Codebook, idCol: String,
-      vecCol: String, path: String): Unit = {
-    val spark = ivf.cells.sparkSession
-    import spark.implicits._
-    IvfIndex.writeByCell(
-      ivf.cells.filter(col(vecCol).isNotNull)
-        .select(col(idCol), codesExpr(cb, col(vecCol)).as("codes"), col("cell")),
-      s"$path/codes", org.apache.spark.sql.SaveMode.Overwrite)
-    ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    (for (j <- 0 until cb.m; c <- 0 until cb.ksub)
-      yield (j, c, cb.centroids(j)(c).toSeq, cb.dim))
-      .toDF("sub", "cell", "c", "dim")
-      .write.mode("overwrite").parquet(s"$path/codebook")
-  }
-
-  def loadCodebook(spark: org.apache.spark.sql.SparkSession, path: String): Codebook = {
-    val rows = spark.read.parquet(s"$path/codebook").collect()
-    val dim = rows.head.getAs[Int]("dim")
-    val m = rows.map(_.getAs[Int]("sub")).max + 1
-    val ksub = rows.map(_.getAs[Int]("cell")).max + 1
-    val cents = Array.ofDim[Array[Double]](m, ksub)
-    rows.foreach { r =>
-      cents(r.getAs[Int]("sub"))(r.getAs[Int]("cell")) =
-        r.getSeq[Double](r.fieldIndex("c")).toArray
-    }
-    Codebook(dim, m, ksub, cents)
-  }
-
-  /** Incremental maintenance of the persisted composed index: arriving
-    * vectors are cell-assigned under the EXISTING coarse centroids and
-    * PQ-encoded under the EXISTING codebook, then appended to the
-    * cell-partitioned code layout — no retraining, no rewrite of the
-    * standing codes (the [[IvfIndex.append]] discipline; at a 100 TB
-    * embedding store, re-encoding the corpus per arriving batch is a
-    * non-starter). Both quantizers staleness-drift as the distribution
-    * moves — retrain when recall decays. */
-  def appendIvfPq(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
-    val cb = loadCodebook(spark, path)
-    val centroids = IvfIndex.centroidMatrix(spark.read.parquet(s"$path/centroids"))
-    IvfIndex.writeByCell(
-      newVectors.filter(col(vecCol).isNotNull)
-        .select(col(idCol), codesExpr(cb, col(vecCol)).as("codes"),
-          nearest_cell(col(vecCol), centroids).as("cell")),
-      s"$path/codes", org.apache.spark.sql.SaveMode.Append)
-  }
-
-  /** Search a persisted IVF∘PQ index with STATIC partition pruning: the
-    * union of probe cells becomes a literal IN filter (the
-    * [[IvfIndex.searchIndexed]] discipline), so the parquet scan lists
-    * only the probed cell directories AND reads only the code column —
-    * the full memory-and-I/O path of a production ANN serve. */
-  def searchIndexedIvfAdc(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nprobe: Int): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val cb = loadCodebook(spark, path)
-    val probesPlan = IvfIndex.probesFor(centroids, queries, idCol, vecCol, nprobe)
-    val probeRows = probesPlan.collect()
-    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val cellCodes = spark.read.parquet(s"$path/codes")
-      .filter(col("cell").isin(probedCells.map(Int.box): _*))
-      .withColumnRenamed(idCol, "neighbor_id")
-    adcOverCells(cellCodes, cb, probes, k)
-  }
+      idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame =
+    CellStore.search(ivf, CellStore.Pq(cb), queries, idCol, vecCol, k, nprobe)
 }

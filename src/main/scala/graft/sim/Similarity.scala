@@ -18,16 +18,6 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  /** Per-process index paths for queries that exercise the persisted
-    * layouts (q180), each registered once for delete-on-exit — a fresh
-    * JVM per bench/verify run would otherwise leak one index copy per
-    * invocation into the temp dir (the q119 discipline). */
-  private val indexCleanupPaths = scala.collection.mutable.HashSet.empty[String]
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(); ()
-  }
   type Q = (SparkSession, String) => DataFrame
 
   /** Run two INDEPENDENT eager model fits as concurrent Spark jobs
@@ -372,7 +362,7 @@ object Similarity {
     * is stored partitioned by the metadata column, prunes partitions —
     * the scan cost drops WITH selectivity, which brute-force ranking then
     * pays only on the survivors. (For very unselective filters compose
-    * with [[lshTopK]]/[[IvfIndex.searchIndexed]] instead: same predicate,
+    * with [[lshTopK]]/[[CellStore.searchIndexed]] instead: same predicate,
     * bucketed candidate generation.) */
   def filteredTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, candidateFilter: Column): DataFrame =
@@ -974,12 +964,9 @@ object Similarity {
       val model = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
       val path = java.nio.file.Files.createTempDirectory("graft_q180")
         .toString
-      indexCleanupPaths.synchronized {
-        if (indexCleanupPaths.add(path)) Runtime.getRuntime.addShutdownHook(
-          new Thread(() => deleteRecursively(new java.io.File(path))))
-      }
-      IvfIndex.save(model, path)
-      IvfIndex.append(s, path,
+      graft.LocalDirs.deleteOnExit(path)
+      CellStore.save(model, CellStore.Raw, "vec_id", "embedding", path)
+      CellStore.append(s, path,
         emb.select((col("vec_id") + 1000000L).as("vec_id"),
           transform(col("embedding"), x => x + lit(4.0f)).as("embedding")),
         "vec_id", "embedding")

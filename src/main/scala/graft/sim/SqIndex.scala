@@ -70,9 +70,10 @@ object SqIndex {
     codesWith(m, vecCol, clamp = false)
 
   /** [[codesExpr]] with per-element [0, 255] saturation — for vectors
-    * OUTSIDE the trained ranges (appended batches: the
-    * closed-over-training-corpus argument stops holding there). On
-    * in-range vectors the two are identical. */
+    * OUTSIDE the trained ranges (appended batches, [[CellStore.append]]:
+    * the closed-over-training-corpus argument stops holding there, so
+    * the clamp is correctness, not cosmetics). On in-range vectors the
+    * two are identical. */
   def clampedCodesExpr(m: Model, vecCol: Column): Column =
     codesWith(m, vecCol, clamp = true)
 
@@ -103,7 +104,7 @@ object SqIndex {
     * fold it replaces interpreted its lambda per element — measured 8×
     * slower than brute force at dim 64, inverting the point of a
     * compressed scan (oracle hashes unchanged by the swap: q184/q185). */
-  private def sqDistCol(m: Model): Column =
+  private[sim] def sqDistCol(m: Model): Column =
     graft.functions.VectorFunctions.sq_adc_dist(col("codes"), col("q_vec"),
       m.vmin, m.vdiff)
 
@@ -127,96 +128,11 @@ object SqIndex {
     * coarse quantizer picks `nprobe` cells, SQ8 codes pay the per-pair
     * cost — each query reads only its probed cells' code rows, and of
     * the corpus only the byte-code column (nprobe/nlist of a store
-    * already 4× smaller). The reconstruction is GLOBAL (not residual),
-    * so the dropped `|q|²` stays constant per query across cells and
-    * cross-cell comparability holds by construction. */
+    * already 4× smaller). Persist with [[CellStore.save]] under
+    * `CellStore.Sq(m)`. */
   def searchIvfSq(ivf: IvfIndex.Model, m: Model, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val cellCodes = ivf.cells.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("neighbor_id"), col("cell"),
-        codesExpr(m, col(vecCol)).as("codes"))
-    val probes = IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe)
-    PqIndex.topKByAdc(
-      cellCodes.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("adist_fp", sqDistCol(m)), k)
-  }
-
-  /** Persist the composed index: SQ8 byte codes PARTITIONED BY IVF cell
-    * (the [[IvfIndex.writeByCell]] one-file-per-cell discipline), the
-    * coarse centroids, and the 2·dim range model — the 100 TB layout: a
-    * probe is a statically partition-pruned scan over files 4× smaller
-    * than the vectors they stand for, reading only the code column. */
-  def saveIvfSq(ivf: IvfIndex.Model, m: Model, idCol: String,
-      vecCol: String, path: String): Unit = {
-    val spark = ivf.cells.sparkSession
-    import spark.implicits._
-    IvfIndex.writeByCell(
-      ivf.cells.filter(col(vecCol).isNotNull)
-        .select(col(idCol), codesExpr(m, col(vecCol)).as("codes"), col("cell")),
-      s"$path/codes", org.apache.spark.sql.SaveMode.Overwrite)
-    ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    (0 until m.dim).map(d => (d, m.vmin(d), m.vdiff(d)))
-      .toDF("d", "vmin", "vdiff")
-      .write.mode("overwrite").parquet(s"$path/ranges")
-  }
-
-  def loadSqModel(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val rows = spark.read.parquet(s"$path/ranges").collect()
-    val dim = rows.length
-    val vmin = new Array[Double](dim)
-    val vdiff = new Array[Double](dim)
-    rows.foreach { r =>
-      val d = r.getAs[Int]("d")
-      vmin(d) = r.getAs[Double]("vmin"); vdiff(d) = r.getAs[Double]("vdiff")
-    }
-    Model(dim, vmin, vdiff)
-  }
-
-  /** Incremental maintenance: cell-assign + SQ-encode arriving vectors
-    * under the EXISTING centroids and ranges, append to the
-    * cell-partitioned layout — no retrain, standing codes untouched
-    * (the [[IvfIndex.append]] / [[PqIndex.appendIvfPq]] discipline; the
-    * same staleness trade, watched by the same
-    * [[IvfIndex.occupancyStats]] advisor). A new vector OUTSIDE a
-    * trained range still encodes total — the affine map just saturates
-    * below 0 / above 255 — so the clamp here is correctness, not
-    * cosmetics (the closed-over-training-corpus argument in
-    * [[codesExpr]] stops holding on appended data). */
-  def appendIvfSq(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
-    val m = loadSqModel(spark, path)
-    val centroids = IvfIndex.centroidMatrix(spark.read.parquet(s"$path/centroids"))
-    IvfIndex.writeByCell(
-      newVectors.filter(col(vecCol).isNotNull)
-        .select(col(idCol), clampedCodesExpr(m, col(vecCol)).as("codes"),
-          graft.functions.VectorFunctions.nearest_cell(col(vecCol), centroids)
-            .as("cell")),
-      s"$path/codes", org.apache.spark.sql.SaveMode.Append)
-  }
-
-  /** Search a persisted IVF∘SQ8 index with STATIC partition pruning:
-    * the probe-cell union becomes a literal IN filter (the
-    * [[IvfIndex.searchIndexed]] discipline), so the scan lists only the
-    * probed cell directories and reads only the byte-code column. */
-  def searchIndexedIvfSq(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nprobe: Int): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val m = loadSqModel(spark, path)
-    val probesPlan = IvfIndex.probesFor(centroids, queries, idCol, vecCol, nprobe)
-    val probeRows = probesPlan.collect()
-    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val cellCodes = spark.read.parquet(s"$path/codes")
-      .filter(col("cell").isin(probedCells.map(Int.box): _*))
-      .withColumnRenamed(idCol, "neighbor_id")
-    PqIndex.topKByAdc(
-      cellCodes.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("adist_fp", sqDistCol(m)), k)
-  }
+      idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame =
+    CellStore.search(ivf, CellStore.Sq(m), queries, idCol, vecCol, k, nprobe)
 
   // ---------------------------------------------------------------- binary
 

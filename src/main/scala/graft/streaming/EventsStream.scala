@@ -643,10 +643,10 @@ object EventsStream {
     *
     * Scale note: a stream-static join re-plans the static side per
     * micro-batch; with `model.cells` backed by the cell-partitioned
-    * parquet layout ([[graft.sim.IvfIndex.save]]), the join key filter
+    * parquet layout ([[graft.sim.CellStore.save]]), the join key filter
     * prunes to probed cells only when the optimizer pushes it — for
     * guaranteed static pruning at 100 TB, the `foreachBatch` form
-    * calling [[graft.sim.IvfIndex.searchIndexed]] per batch is the
+    * calling [[graft.sim.CellStore.searchIndexed]] per batch is the
     * drop-in alternative (same result contract; that path collects the
     * batch's probe set and pushes a literal IN over the partition
     * column). This declarative form is the one that composes with

@@ -2,8 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.sim.{IvfIndex, PqIndex, SqIndex}
+import graft.sim.{IvfIndex, PqIndex}
 import graft.sources.Tables
+import scala.util.control.NonFatal
 
 /** Scratch instrumentation for the optimization round: phase timings of
   * the expensive queries (dev-only; not part of the driver contract). */
@@ -37,7 +38,7 @@ object OptProbe {
         .orderBy("p_brand").count()
       spark.read.parquet(s"$sfDir/documents.parquet")
         .select(xxhash64(col("text"))).count()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     val which = if (args.isEmpty) "q177" else args(0)
 
@@ -200,146 +201,6 @@ object OptProbe {
               .write.format("noop").mode("overwrite").save()
           }
         }
-
-      case "foldab" =>
-        // In-JVM interleaved A/B of the r15 TrainFold rewrite at ladder
-        // scale: the old groupBy.agg.collect round (reconstructed
-        // verbatim from the r14 code) vs TrainFold, alternating in ONE
-        // session so host drift cancels; values asserted equal inline.
-        val emb = Tables(spark, sfDir, "embeddings")
-        val clean = emb.filter(col("embedding").isNotNull)
-        val m = 8; val ksub = 16
-        val cb0 = PqIndex.train(clean, "vec_id", "embedding", m, ksub, maxIter = 0)
-        val dsub = cb0.dsub; val dim = cb0.dim
-        val subs = clean
-          .select(col("vec_id"), explode(sequence(lit(0), lit(m - 1))).as("sub"),
-            col("embedding"))
-          .select(col("vec_id"), col("sub"),
-            slice(col("embedding"), col("sub") * dsub + 1, lit(dsub)).as("subvec"))
-        def assignBySub = cb0.centroids.zipWithIndex.tail.foldLeft(
-          graft.functions.VectorFunctions.nearest_cell(col("subvec"), cb0.centroids(0))) {
-          case (acc, (mat, j)) =>
-            when(col("sub") === j,
-              graft.functions.VectorFunctions.nearest_cell(col("subvec"), mat)).otherwise(acc)
-        }
-        val sums = (0 until dsub).map(i =>
-          sum(floor(element_at(col("subvec"), i + 1).cast("double") * lit(1e9))
-            .cast("long")).as(s"s_$i"))
-        val keyed = subs.select(
-          (col("sub") * lit(ksub) + assignBySub).cast("int").as("k"), col("subvec"))
-        var oldStats: Array[org.apache.spark.sql.Row] = null
-        var newStats: (Array[Long], Array[Long]) = null
-        for (rep <- 1 to 3) {
-          t(s"lloyd round OLD (groupBy.agg) rep$rep") {
-            oldStats = subs.withColumn("cell", assignBySub)
-              .groupBy("sub", "cell").agg(count(lit(1)).as("n"), sums: _*)
-              .collect()
-          }
-          t(s"lloyd round NEW (TrainFold)    rep$rep") {
-            newStats = graft.sim.TrainFold.keyedFixedPointSums(keyed, m * ksub, dsub)
-          }
-        }
-        // value identity
-        oldStats.foreach { r =>
-          val k = r.getAs[Int]("sub") * ksub + r.getAs[Int]("cell")
-          assert(newStats._1(k) == r.getAs[Long]("n"), s"count mismatch at $k")
-          (0 until dsub).foreach(i =>
-            assert(newStats._2(k * dsub + i) == r.getAs[Long](s"s_$i"),
-              s"sum mismatch at $k/$i"))
-        }
-        System.err.println("[foldab] lloyd stats identical old vs new")
-        val withCodes = clean.select(col("embedding"),
-          PqIndex.codesExpr(cb0, col("embedding")).as("codes"))
-        var oldS: Array[Long] = null
-        var newS: Array[Long] = null
-        for (rep <- 1 to 3) {
-          t(s"crossCov OLD (explode+agg) rep$rep") {
-            val rows = withCodes
-              .select(posexplode(col("codes")).as(Seq("sub", "cell")), col("embedding"))
-              .select(col("sub"), col("cell"),
-                explode(sequence(lit(0), lit(dim - 1))).as("i"), col("embedding"))
-              .groupBy("i", "sub", "cell")
-              .agg(sum(floor(element_at(col("embedding"), col("i") + 1).cast("double")
-                * lit(1e9)).cast("long")).as("s"))
-              .collect()
-            val s = new Array[Long](dim * m * ksub)
-            rows.foreach { r =>
-              s((r.getAs[Int]("i") * m + r.getAs[Int]("sub")) * ksub +
-                r.getAs[Int]("cell")) = r.getAs[Long]("s")
-            }
-            oldS = s
-          }
-          t(s"crossCov NEW (codesCrossSums) rep$rep") {
-            newS = graft.sim.TrainFold.codesCrossSums(
-              withCodes.select(col("codes"), col("embedding")), m, ksub, dim)
-          }
-        }
-        assert(java.util.Arrays.equals(oldS, newS), "crossCov mismatch")
-        System.err.println("[foldab] crossCov identical old vs new")
-
-      case "dumptrain" =>
-        // Training-phase plan evidence for the r15 TrainFold change: the
-        // per-Lloyd-round relation as it is NOW folded (keyed projection,
-        // no Exchange) vs the aggregation form it replaced (reconstructed
-        // VERBATIM from the r14 train()/crossCovFp bodies — verify with
-        // `git show fd5db8b:src/main/scala/graft/sim/PqIndex.scala`).
-        // These are the plans each training round analyzes and runs; the
-        // queries' FINAL plans embed only the trained literals and are
-        // unchanged (dumped separately).
-        import java.nio.charset.StandardCharsets.UTF_8
-        import java.nio.file.{Files, Paths}
-        val outDir = Paths.get("plans/r15")
-        Files.createDirectories(outDir)
-        def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          Files.write(outDir.resolve(s"$name.txt"), plan.getBytes(UTF_8))
-          System.err.println(s"[dumptrain] wrote $name.txt (${plan.length} chars)")
-        }
-        val emb = Tables(spark, sfDir, "embeddings")
-        val clean = emb.filter(col("embedding").isNotNull)
-        val m = 4; val ksub = 8
-        val cb0 = PqIndex.train(clean, "vec_id", "embedding", m, ksub, maxIter = 0)
-        val dsub = cb0.dsub
-        val subs = clean
-          .select(col("vec_id"), explode(sequence(lit(0), lit(m - 1))).as("sub"),
-            col("embedding"))
-          .select(col("vec_id"), col("sub"),
-            slice(col("embedding"), col("sub") * dsub + 1, lit(dsub)).as("subvec"))
-        def assignBySub = cb0.centroids.zipWithIndex.tail.foldLeft(
-          graft.functions.VectorFunctions.nearest_cell(col("subvec"), cb0.centroids(0))) {
-          case (acc, (mat, j)) =>
-            when(col("sub") === j,
-              graft.functions.VectorFunctions.nearest_cell(col("subvec"), mat)).otherwise(acc)
-        }
-        // BEFORE (r14): one aggregation per round — partial agg, Exchange,
-        // final agg, collect
-        val sums = (0 until dsub).map(i =>
-          sum(floor(element_at(col("subvec"), i + 1).cast("double") * lit(1e9))
-            .cast("long")).as(s"s_$i"))
-        dump("trainpq_lloyd_round_before",
-          subs.withColumn("cell", assignBySub)
-            .groupBy("sub", "cell")
-            .agg(count(lit(1)).as("n"), sums: _*))
-        // AFTER (r15): the keyed projection TrainFold folds in one stage
-        dump("trainpq_lloyd_round_after",
-          subs.select((col("sub") * lit(ksub) + assignBySub).cast("int").as("k"),
-            col("subvec")))
-        // crossCovFp BEFORE (r14): posexplode × sequence-explode + agg
-        val dim = cb0.dim
-        val withCodes = clean.select(col("embedding"),
-          PqIndex.codesExpr(cb0, col("embedding")).as("codes"))
-        dump("crosscov_before",
-          withCodes
-            .select(posexplode(col("codes")).as(Seq("sub", "cell")), col("embedding"))
-            .select(col("sub"), col("cell"),
-              explode(sequence(lit(0), lit(dim - 1))).as("i"),
-              col("embedding"))
-            .groupBy("i", "sub", "cell")
-            .agg(sum(floor(element_at(col("embedding"), col("i") + 1).cast("double")
-              * lit(1e9)).cast("long")).as("s")))
-        // crossCovFp AFTER (r15): the un-exploded projection codesCrossSums folds
-        dump("crosscov_after", withCodes.select(col("codes"), col("embedding")))
 
       case "jobs" =>
         // job-structure accounting for the Lloyd-loop queries

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Generates PLANS.md: one row of physical-plan metrics per query —
   * shuffle exchanges, broadcast joins, whole-stage-codegen spans, and
@@ -67,7 +68,7 @@ object PlanReport {
           s"${if (m.pushedFilters) "yes" else "—"} | " +
           s"${if (m.prunedSchema) "yes" else "—"} |"
       } catch {
-        case e: Throwable => s"| $name | — | — | err | ${e.getClass.getSimpleName} |"
+        case NonFatal(e) => s"| $name | — | — | err | ${e.getClass.getSimpleName} |"
       }
     }
 

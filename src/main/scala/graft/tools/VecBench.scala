@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sim.{IvfIndex, PqIndex, Similarity, SqIndex}
+import graft.sim.{CellStore, IvfIndex, PqIndex, Similarity, SqIndex}
 
 /** ANN decade benchmark (dev tool, NOT library surface): measures the
   * full similarity-search stack — brute-force truth, hyperplane LSH,
@@ -26,9 +26,9 @@ import graft.sim.{IvfIndex, PqIndex, Similarity, SqIndex}
   * copy-0 ids stable across decades, so these are the SAME 32 base
   * vectors at every scale.
   *
-  * Index builds go through the persisted layouts (`IvfIndex.save` /
-  * `PqIndex.saveIvfPq` under `.vecbench/`) and searches through the
-  * `searchIndexed*` partition-pruned paths — the cost measured is the
+  * Index builds go through the persisted layouts (`CellStore.save` with
+  * the raw and PQ codecs under `.vecbench/`) and searches through the
+  * `CellStore.searchIndexed` partition-pruned path — the cost measured is the
   * 100 TB shape (build once, serve from a cell-pruned scan), not an
   * in-memory shortcut.
   *
@@ -108,10 +108,10 @@ object VecBench {
     val (_, tIvfBuild) = timed {
       val m = IvfIndex.build(corpus, "vec_id", "embedding", nlist,
         trainSixteenths = sixteenths)
-      IvfIndex.save(m, ivfPath)
+      CellStore.save(m, CellStore.Raw, "vec_id", "embedding", ivfPath)
     }
     val (ivfRows, tIvfSearch) = timed {
-      IvfIndex.searchIndexed(spark, ivfPath, queries, "vec_id", "embedding",
+      CellStore.searchIndexed(spark, ivfPath, queries, "vec_id", "embedding",
         k, nprobe).collect()
     }
     val ivfDf = spark.createDataFrame(java.util.Arrays.asList(ivfRows: _*), exactSchema)
@@ -133,7 +133,7 @@ object VecBench {
         .map(math.max(1, _)).distinct
       val rows = points.map { np =>
         val (r, t) = timed {
-          IvfIndex.searchIndexed(spark, ivfPath, queries, "vec_id", "embedding",
+          CellStore.searchIndexed(spark, ivfPath, queries, "vec_id", "embedding",
             k, np).collect()
         }
         val rec = meanRecall(spark.createDataFrame(
@@ -392,7 +392,7 @@ object VecBench {
         trainSixteenths = sixteenths)
       val cb = PqIndex.train(normed, "vec_id", "embedding", m = 8, ksub = 16,
         trainSixteenths = sixteenths)
-      PqIndex.saveIvfPq(ivfN, cb, "vec_id", "embedding", pqPath)
+      CellStore.save(ivfN, CellStore.Pq(cb), "vec_id", "embedding", pqPath)
     }
     // incremental maintenance at the decade: assign+append a 1%-of-corpus
     // batch (max 2000 vectors) under the EXISTING centroids — the cost a
@@ -401,7 +401,7 @@ object VecBench {
     val (_, tAppend) = timed {
       val batch = corpus.orderBy(desc("vec_id")).limit(nApp)
         .withColumn("vec_id", col("vec_id") + lit(1000000000L))
-      IvfIndex.append(spark, ivfPath, batch, "vec_id", "embedding")
+      CellStore.append(spark, ivfPath, batch, "vec_id", "embedding")
     }
 
     // shortlist sweep: the ADC shortlist must scale with the probed
@@ -413,9 +413,12 @@ object VecBench {
         val normed = spark.read.parquet(normPath)
         val qN = normed.filter(col("vec_id") < 32)
         // the library's two-stage serve, not a hand-rolled rerank — the
-        // bench must measure the q163-proven path itself
-        PqIndex.searchIndexedIvfAdcRerank(spark, pqPath, normed, qN,
-          "vec_id", "embedding", k, nprobe, shortlist).collect()
+        // bench must measure the q163-proven path itself: the pruned
+        // ADC shortlist, then the shared exact-cosine re-rank
+        PqIndex.rerankExact(
+          CellStore.searchIndexed(spark, pqPath, qN, "vec_id", "embedding",
+            shortlist, nprobe).select("query_id", "neighbor_id"),
+          normed, qN, "vec_id", "embedding", k).collect()
       }
       val pqDf = spark.createDataFrame(java.util.Arrays.asList(pqRows: _*), exactSchema)
       (t, meanRecall(pqDf))

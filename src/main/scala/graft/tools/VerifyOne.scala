@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Selective correctness dump: like [[graft.Verify]] but only for the
   * named queries — the fast inner loop when adding one operator
@@ -27,7 +28,7 @@ object VerifyOne {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           println(s"[verify-one] dumped $name")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify-one] $name failed: ${e.getMessage}")
         }
       }

@@ -1052,6 +1052,32 @@ class DedupSpec extends SparkSpec {
       n == 1100001L && rf == 100001L && e == 1.0 }, s"hits2=${hits2.toSeq}")
   }
 
+  test("LSH index bands land as ONE data file per band, however many write tasks") {
+    // 200 shuffle partitions, no coalescing, one read split per file:
+    // the signature write and the band write that reads it back both run
+    // ~200 tasks, so a bare partitionBy would emit a file per task per band
+    val confs = Seq("spark.sql.shuffle.partitions" -> "200",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.files.openCostInBytes" -> (128L << 20).toString)
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val dir = java.nio.file.Files.createTempDirectory("graft_lshidx_files").toString
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      Dedup.saveLshIndex(docs, "text", "doc_id", dir)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val sigFiles = new java.io.File(s"$dir/sigs").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(sigFiles > 16, s"only $sigFiles signature files: the write was not forced wide")
+    val bandDirs = new java.io.File(s"$dir/bands").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("band_idx="))
+    assert(bandDirs.length == 16)
+    val dataFiles = bandDirs.map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
+    assert(dataFiles <= 16, s"$dataFiles band data files for 16 bands")
+  }
+
   test("maxBucket skew cap is observable: oversized buckets + dropped volume reported") {
     // crafted degenerate bucket: 40 documents with IDENTICAL text share
     // one signature, so every band's bucket holds all 40 of them

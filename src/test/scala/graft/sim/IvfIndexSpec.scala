@@ -54,11 +54,11 @@ class IvfIndexSpec extends SparkSpec {
 
   test("persisted index probe partition-prunes and matches in-memory search") {
     val dir = java.nio.file.Files.createTempDirectory("ivf").toString
-    IvfIndex.save(model, dir)
+    CellStore.save(model, CellStore.Raw, "vec_id", "embedding", dir)
     val queries = emb.filter(col("vec_id") < 5)
     val inMem = IvfIndex.search(model, queries, "vec_id", "embedding", 3, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val indexed = IvfIndex.searchIndexed(spark, dir, queries,
+    val indexed = CellStore.searchIndexed(spark, dir, queries,
       "vec_id", "embedding", k = 3, nprobe = 2)
     val got = indexed.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == inMem)
@@ -75,7 +75,7 @@ class IvfIndexSpec extends SparkSpec {
     // (8 tasks × cells files) is actually reachable in this spec.
     val dir = java.nio.file.Files.createTempDirectory("ivf_files").toString
     val spread = IvfIndex.build(emb.repartition(8), "vec_id", "embedding", nlist = 8)
-    IvfIndex.save(spread, dir)
+    CellStore.save(spread, CellStore.Raw, "vec_id", "embedding", dir)
     val cellDirs = new java.io.File(s"$dir/cells").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty)
@@ -87,7 +87,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("occupancy advisor: footer-only stats; stationary appends don't trip the retrain rule, drift does") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_advisor").toString
-    IvfIndex.save(model, dir)
+    CellStore.save(model, CellStore.Raw, "vec_id", "embedding", dir)
     val base = IvfIndex.occupancyStats(spark, dir).head()
     assert(base.getAs[Long]("n_vecs") == emb.count())
     val baseImb = base.getAs[Double]("imbalance")
@@ -99,7 +99,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(statsPlan.contains("ReadSchema: struct<>"), statsPlan)
     // stationary append: same distribution, offset ids — the imbalance
     // stays at the build-time level and the rule must NOT trip
-    IvfIndex.append(spark, dir,
+    CellStore.append(spark, dir,
       emb.select((col("vec_id") + 500000L).as("vec_id"), col("embedding")),
       "vec_id", "embedding")
     val stationary = IvfIndex.occupancyStats(spark, dir).head()
@@ -113,7 +113,7 @@ class IvfIndexSpec extends SparkSpec {
     // facing the shift — the rule must trip. (Negation is NOT drift
     // here: the corpus is symmetric about the origin, measured
     // imbalance 1.02.)
-    IvfIndex.append(spark, dir,
+    CellStore.append(spark, dir,
       emb.select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x + lit(4.0f)).as("embedding")),
       "vec_id", "embedding")
@@ -128,10 +128,11 @@ class IvfIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivf_append").toString
     val firstHalf = emb.filter(col("vec_id") % 2 === 0)
     val secondHalf = emb.filter(col("vec_id") % 2 === 1)
-    IvfIndex.save(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8), dir)
-    IvfIndex.append(spark, dir, secondHalf, "vec_id", "embedding")
+    CellStore.save(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
+      CellStore.Raw, "vec_id", "embedding", dir)
+    CellStore.append(spark, dir, secondHalf, "vec_id", "embedding")
     // the appended index covers the whole corpus
-    val appended = IvfIndex.load(spark, dir)
+    val appended = CellStore.load(spark, dir)
     assert(appended.cells.count() == emb.count())
     // appended vectors are assigned under the EXISTING centroids: cell
     // ids stay in range and searchIndexed at full probe reproduces brute
@@ -139,7 +140,7 @@ class IvfIndexSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 5)
     val brute = Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val got = IvfIndex.searchIndexed(spark, dir, queries,
+    val got = CellStore.searchIndexed(spark, dir, queries,
       "vec_id", "embedding", k = 3, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == brute)

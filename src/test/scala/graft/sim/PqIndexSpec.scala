@@ -64,12 +64,12 @@ class PqIndexSpec extends SparkSpec {
   test("persisted IVF∘PQ index partition-prunes, reads only codes, matches in-memory") {
     val ivf = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    PqIndex.saveIvfPq(ivf, cb, "vec_id", "embedding", dir)
+    CellStore.save(ivf, CellStore.Pq(cb), "vec_id", "embedding", dir)
     val queries = emb.filter(col("vec_id") < 5)
     val inMem = PqIndex.searchIvfAdc(ivf, cb, queries,
       "vec_id", "embedding", k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val indexed = PqIndex.searchIndexedIvfAdc(spark, dir, queries,
+    val indexed = CellStore.searchIndexed(spark, dir, queries,
       "vec_id", "embedding", k = 3, nprobe = 2)
     val got = indexed.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == inMem)
@@ -84,9 +84,9 @@ class PqIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_append").toString
     val firstHalf = emb.filter(col("vec_id") % 2 === 0)
     val secondHalf = emb.filter(col("vec_id") % 2 === 1)
-    PqIndex.saveIvfPq(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
-      cb, "vec_id", "embedding", dir)
-    PqIndex.appendIvfPq(spark, dir, secondHalf, "vec_id", "embedding")
+    CellStore.save(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
+      CellStore.Pq(cb), "vec_id", "embedding", dir)
+    CellStore.append(spark, dir, secondHalf, "vec_id", "embedding")
     assert(spark.read.parquet(s"$dir/codes").count() == emb.count())
     // appended codes are assigned/encoded under the EXISTING quantizers:
     // at full probe the persisted search reproduces the flat ADC scan
@@ -96,10 +96,20 @@ class PqIndexSpec extends SparkSpec {
       PqIndex.encode(emb, "vec_id", "embedding", cb),
       queries, "vec_id", "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val got = PqIndex.searchIndexedIvfAdc(spark, dir, queries,
+    val got = CellStore.searchIndexed(spark, dir, queries,
       "vec_id", "embedding", k = 3, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == flat)
+  }
+
+  test("a store path holding two index layouts fails to load instead of mixing them") {
+    val ivf = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_mixed").toString
+    CellStore.save(ivf, CellStore.Pq(cb), "vec_id", "embedding", dir)
+    assert(CellStore.load(spark, dir).codec.isInstanceOf[CellStore.Pq])
+    CellStore.save(ivf, CellStore.Raw, "vec_id", "embedding", dir)
+    val e = intercept[IllegalArgumentException](CellStore.load(spark, dir))
+    assert(e.getMessage.contains("mixes index layouts"), e.getMessage)
   }
 
   test("two-stage re-rank: exact cosines, recall >= plain ADC, shortlist broadcast") {

@@ -64,16 +64,19 @@ class SqIndexSpec extends SparkSpec {
   test("persisted IVF∘SQ8 index partition-prunes, reads only codes, matches in-memory") {
     val ivf = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
     val dir = java.nio.file.Files.createTempDirectory("ivfsq").toString
-    SqIndex.saveIvfSq(ivf, m, "vec_id", "embedding", dir)
+    CellStore.save(ivf, CellStore.Sq(m), "vec_id", "embedding", dir)
     // round-trip of the range model (the load-bearing state: a drifted
     // range silently rescales every reconstruction)
-    val m2 = SqIndex.loadSqModel(spark, dir)
+    val m2 = CellStore.load(spark, dir).codec match {
+      case CellStore.Sq(loaded) => loaded
+      case other => fail(s"expected the SQ codec, loaded $other")
+    }
     assert(m2.vmin.toSeq == m.vmin.toSeq && m2.vdiff.toSeq == m.vdiff.toSeq)
     val queries = emb.filter(col("vec_id") < 5)
     val inMem = SqIndex.searchIvfSq(ivf, m, queries,
       "vec_id", "embedding", k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val indexed = SqIndex.searchIndexedIvfSq(spark, dir, queries,
+    val indexed = CellStore.searchIndexed(spark, dir, queries,
       "vec_id", "embedding", k = 3, nprobe = 2)
     val got = indexed.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == inMem)
@@ -89,9 +92,9 @@ class SqIndexSpec extends SparkSpec {
     // train ranges AND centroids on the first half only, so second-half
     // coordinates genuinely fall outside some trained [min,max]
     val mH = SqIndex.train(firstHalf, "vec_id", "embedding")
-    SqIndex.saveIvfSq(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
-      mH, "vec_id", "embedding", dir)
-    SqIndex.appendIvfSq(spark, dir, secondHalf, "vec_id", "embedding")
+    CellStore.save(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
+      CellStore.Sq(mH), "vec_id", "embedding", dir)
+    CellStore.append(spark, dir, secondHalf, "vec_id", "embedding")
     val codes = spark.read.parquet(s"$dir/codes")
     assert(codes.count() == emb.count())
     // every appended code saturated into [0, 255] — no negative or
@@ -105,7 +108,7 @@ class SqIndexSpec extends SparkSpec {
     val flat = SqIndex.searchSqAdc(mH, clampedAll, queries,
       "vec_id", "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val got = SqIndex.searchIndexedIvfSq(spark, dir, queries,
+    val got = CellStore.searchIndexed(spark, dir, queries,
       "vec_id", "embedding", k = 3, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == flat)
