@@ -13,6 +13,10 @@ import graft.sources.Tables
   * publish window is as small as possible. Unlike the single-threaded
   * reference, each phase step is a distributed Spark job.
   *
+  * A plain table costs three Spark jobs: its schema inference, the F1
+  * `isEmpty` probe and the staging write. The staged files are counted,
+  * validated and published on the driver (see [[Staging]], [[Publish]]).
+  *
   * Results mirror the reference's exit codes
   * (`CopyTool.java:66-68,95-106`): Copied=0, NoNewData=2, Failed=1.
   */
@@ -90,11 +94,15 @@ object CopyJob {
   final case class Failed(reason: String, cause: Option[Throwable] = None)
     extends JobResult { val exitCode = 1 }
 
-  /** Resolve a FromSpec to a DataFrame (the A1-A3 scan surface). */
+  /** Resolve a FromSpec to a DataFrame (the A1-A3 scan surface). A query
+    * registers only the tables whose names appear in it as a word: each
+    * registration infers a schema, one Spark job, and a word match can
+    * only over-register. */
   def resolveSource(spark: SparkSession, cfg: JobConfig, from: FromSpec): DataFrame =
     from.query match {
       case Some(q) =>
-        Tables.registerAll(spark, cfg.sourceDir)
+        Tables.names.filter(n => raw"(?i)\b$n\b".r.findFirstIn(q).isDefined)
+          .foreach(n => Tables(spark, cfg.sourceDir, n).createOrReplaceTempView(n))
         spark.sql(q)
       case None =>
         val df = Tables(spark, cfg.sourceDir, from.name)
@@ -202,17 +210,17 @@ object CopyJob {
       val version = Publish.newVersion()
 
       // shared phase-2 body (normal and resume paths must never diverge):
-      // F3 validate, B4 zero-row short-circuit, then load per publish mode
+      // F3 validate, B4 zero-row short-circuit, then load per publish mode.
+      // The file publishes link the staged files; only the database loads
+      // read them back.
       def loadOne(t: TableSpec): Unit = {
-        val m = Staging.validate(spark, stagingDir(cfg, t))   // F3
-        if (m.count > 0 || t.allowEmpty) {                    // B4 short-circuit
-          val staged = Staging.read(spark, stagingDir(cfg, t))
-          t.publishMode match {
-            case ViewSwitch => Publish.writeSnapshot(staged, cfg.targetRoot, t.to, version)
-            case TempSwap   => Publish.tempSwapPublish(staged, cfg.targetRoot, t.to)
-            case j: JdbcLoad => jdbcLoad(staged, j, t.to)
-            case ml: MonetLoad => monetLoad(staged, ml, t.to, m.count)
-          }
+        val dir = stagingDir(cfg, t)
+        val m = Staging.validate(spark, dir)                  // F3
+        if (m.count > 0 || t.allowEmpty) t.publishMode match { // B4 short-circuit
+          case ViewSwitch => Publish.linkSnapshot(Staging.dataDir(dir), cfg.targetRoot, t.to, version)
+          case TempSwap   => Publish.tempSwapPublish(Staging.dataDir(dir), cfg.targetRoot, t.to)
+          case j: JdbcLoad => jdbcLoad(Staging.read(spark, dir), j, t.to)
+          case ml: MonetLoad => monetLoad(Staging.read(spark, dir), ml, t.to, m.count)
         }
       }
 
@@ -232,16 +240,20 @@ object CopyJob {
           return Failed(s"empty staged tables: ${empties.map(_.id).mkString(", ")}")
         parForeach(cfg.tables, cfg.tableParallelism)(loadOne)
       } else if (!cfg.switchOnly) {
+        // each source is resolved once: the F1 probe and the phase-1
+        // extract share its file listing and inferred schema
+        val sources = cfg.tables.map(t => t -> resolveSource(spark, cfg, t.from))
+
         // ---- F1 empty-source guard: ALL tables checked before ANY copy
-        val empties = cfg.tables.filterNot(_.allowEmpty).filter { t =>
-          resolveSource(spark, cfg, t.from).isEmpty   // limit-1 probe, not count
+        val empties = sources.collect {
+          case (t, df) if !t.allowEmpty && df.isEmpty => t   // limit-1 probe, not count
         }
         if (empties.nonEmpty)
           return Failed(s"empty source tables: ${empties.map(_.id).mkString(", ")}")
 
         // ---- PHASE 1: extract ALL tables to durable staging
-        parForeach(cfg.tables, cfg.tableParallelism) { t =>
-          Staging.stage(resolveSource(spark, cfg, t.from), stagingDir(cfg, t), t.autoTrim)
+        parForeach(sources, cfg.tableParallelism) { case (t, df) =>
+          Staging.stage(df, stagingDir(cfg, t), t.autoTrim)
         }
 
         // ---- PHASE 2: load ALL tables (staging → snapshot)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileSystemException, Files, Path, Paths, StandardCopyOption}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -22,6 +22,12 @@ import graft.LocalDirs
   *   <root>/<table>/v=<version>/   (immutable parquet snapshots)
   *   <root>/<table>/CURRENT        (pointer: the published version)
   * }}}
+  *
+  * A snapshot dir is filled under a hidden name and renamed into place
+  * with one ATOMIC_MOVE, so it appears whole or not at all. The copy job
+  * fills it by hard-linking the staged parquet files ([[linkSnapshot]]):
+  * the staged bytes are published as written, not decoded and encoded a
+  * second time.
   */
 object Publish {
 
@@ -59,9 +65,39 @@ object Publish {
   private def currentPtr(root: String, table: String): Path =
     tableDir(root, table).resolve("CURRENT")
 
-  /** Load a snapshot version (phase 2). Immutable once written. */
+  /** Load a snapshot version (phase 2) by writing `df`. Immutable once
+    * written. */
   def writeSnapshot(df: DataFrame, root: String, table: String, version: String): Unit =
-    df.write.mode("overwrite").parquet(snapshotDir(root, table, version))
+    install(Paths.get(snapshotDir(root, table, version)))(tmp => df.write.parquet(tmp.toString))
+
+  /** Load a snapshot version (phase 2) from the parquet files in `files`
+    * (a staged dataset), by hard link. */
+  def linkSnapshot(files: Path, root: String, table: String, version: String): Unit =
+    install(Paths.get(snapshotDir(root, table, version)))(linkFiles(files, _))
+
+  /** Fill a hidden sibling of `dest`, then rename it onto `dest` with one
+    * ATOMIC_MOVE. An existing `dest` is dropped first. A leftover of a
+    * crashed fill is dropped before the next one. */
+  private def install(dest: Path)(fill: Path => Unit): Unit = {
+    val tmp = dest.resolveSibling(s".${dest.getFileName}.tmp")
+    LocalDirs.deleteRecursively(tmp)
+    fill(tmp)
+    LocalDirs.deleteRecursively(dest)
+    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Hard-link every file of `src` into a new dir `dst`, or copy its bytes
+    * where a link cannot be made (`src` on another file system). Spark
+    * never rewrites a written file in place: a re-stage or a cleanup
+    * unlinks the staged names, so the linked snapshot keeps its bytes. */
+  private def linkFiles(src: Path, dst: Path): Unit = {
+    Files.createDirectories(dst)
+    LocalDirs.list(src).filter(Files.isRegularFile(_)).foreach { f =>
+      val to = dst.resolve(f.getFileName)
+      try Files.createLink(to, f)
+      catch { case _: FileSystemException => Files.copy(f, to) }
+    }
+  }
 
   /** E4 newest-version discovery: list + lexicographic max (version string
     * ordering == timestamp ordering for this format). Lazy listing — only
@@ -127,17 +163,11 @@ object Publish {
     drop.sorted
   }
 
-  /** E2 temp-swap publish (the non-versioned mode): stage under a `tmp_`
-    * dir, then swap into the stable data dir. Same drop-then-swap window
-    * as the reference (`CopyTool.java:1107-1124`) — documented, and the
-    * versioned+pointer mode above is the preferred atomic path. */
-  def tempSwapPublish(df: DataFrame, root: String, table: String): Unit = {
-    val dir = tableDir(root, table)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve("tmp_data")
-    val fin = dir.resolve("data")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    LocalDirs.deleteRecursively(fin)
-    Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** E2 temp-swap publish (the non-versioned mode): link the staged
+    * parquet files in `files` into a hidden temp dir, then swap it into
+    * the stable data dir. Same drop-then-swap window as the reference
+    * (`CopyTool.java:1107-1124`) — documented, and the versioned+pointer
+    * mode above is the preferred atomic path. */
+  def tempSwapPublish(files: Path, root: String, table: String): Unit =
+    install(tableDir(root, table).resolve("data"))(linkFiles(files, _))
 }

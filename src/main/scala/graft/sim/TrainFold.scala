@@ -25,50 +25,54 @@ import org.apache.spark.sql.catalyst.InternalRow
   * addition is commutative/associative, so any partition layout or merge
   * order produces the same sums — the same order-independence argument
   * the fixed-point aggregation itself was chosen for.
+  *
+  * Each partition's partial is added into the driver's arrays as it
+  * arrives (`runJob`'s result handler), so the driver holds one result
+  * array, not one per partition. Input a caller should have filtered
+  * fails the job: a null key or vector row, or a code outside
+  * `0 ≤ cell < ksub` — either would otherwise be skipped or land
+  * silently in a wrong slot.
   */
 private[graft] object TrainFold {
 
   /** `counts(k)` and `sums(k·dim + i) = Σ floor(double(vec_i) · 1e9)`
     * over rows with key `k`, in one single-stage job. `df` must project
-    * exactly `(k: int, vec: array<float>)` with `0 ≤ k < nKeys`; rows
-    * with a null key or null vector are skipped (callers filter null
-    * vectors already), null elements contribute nothing (SQL `sum`
-    * semantics) while the row still counts (`count(lit(1))`). */
+    * exactly `(k: int, vec: array<float>)` with `0 ≤ k < nKeys` and no
+    * null key or vector (callers filter null vectors); null elements
+    * contribute nothing (SQL `sum` semantics) while the row still counts
+    * (`count(lit(1))`). */
   def keyedFixedPointSums(df: DataFrame, nKeys: Int,
       dim: Int): (Array[Long], Array[Long]) = {
     require(nKeys > 0 && dim > 0, s"nKeys=$nKeys dim=$dim out of range")
-    val partials = df.sparkSession.sparkContext.runJob(
+    val counts = new Array[Long](nKeys)
+    val sums = new Array[Long](nKeys * dim)
+    df.sparkSession.sparkContext.runJob(
       df.queryExecution.toRdd,
       (it: Iterator[InternalRow]) => {
         val counts = new Array[Long](nKeys)
         val sums = new Array[Long](nKeys * dim)
         while (it.hasNext) {
           val row = it.next()
-          if (!row.isNullAt(0) && !row.isNullAt(1)) {
-            val k = row.getInt(0)
-            val arr = row.getArray(1)
-            counts(k) += 1L
-            val n = math.min(dim, arr.numElements())
-            var i = 0
-            while (i < n) {
-              if (!arr.isNullAt(i)) {
-                sums(k * dim + i) +=
-                  math.floor(arr.getFloat(i).toDouble * 1e9).toLong
-              }
-              i += 1
+          requireRow(row)
+          val k = row.getInt(0)
+          val arr = row.getArray(1)
+          counts(k) += 1L
+          val n = math.min(dim, arr.numElements())
+          var i = 0
+          while (i < n) {
+            if (!arr.isNullAt(i)) {
+              sums(k * dim + i) +=
+                math.floor(arr.getFloat(i).toDouble * 1e9).toLong
             }
+            i += 1
           }
         }
         (counts, sums)
+      },
+      (_: Int, p: (Array[Long], Array[Long])) => {
+        addInto(counts, p._1)
+        addInto(sums, p._2)
       })
-    val counts = new Array[Long](nKeys)
-    val sums = new Array[Long](nKeys * dim)
-    partials.foreach { case (c, s) =>
-      var i = 0
-      while (i < nKeys) { counts(i) += c(i); i += 1 }
-      i = 0
-      while (i < sums.length) { sums(i) += s(i); i += 1 }
-    }
     (counts, sums)
   }
 
@@ -83,41 +87,52 @@ private[graft] object TrainFold {
   def codesCrossSums(df: DataFrame, m: Int, ksub: Int,
       dim: Int): Array[Long] = {
     require(m > 0 && ksub > 0 && dim > 0, s"m=$m ksub=$ksub dim=$dim out of range")
-    val partials = df.sparkSession.sparkContext.runJob(
+    val s = new Array[Long](dim * m * ksub)
+    df.sparkSession.sparkContext.runJob(
       df.queryExecution.toRdd,
       (it: Iterator[InternalRow]) => {
         val s = new Array[Long](dim * m * ksub)
         while (it.hasNext) {
           val row = it.next()
-          if (!row.isNullAt(0) && !row.isNullAt(1)) {
-            val codes = row.getArray(0)
-            val x = row.getArray(1)
-            val nSub = math.min(m, codes.numElements())
-            val n = math.min(dim, x.numElements())
-            var j = 0
-            while (j < nSub) {
-              if (!codes.isNullAt(j)) {
-                val cell = codes.getInt(j)
-                var i = 0
-                while (i < n) {
-                  if (!x.isNullAt(i)) {
-                    s((i * m + j) * ksub + cell) +=
-                      math.floor(x.getFloat(i).toDouble * 1e9).toLong
-                  }
-                  i += 1
+          requireRow(row)
+          val codes = row.getArray(0)
+          val x = row.getArray(1)
+          val nSub = math.min(m, codes.numElements())
+          val n = math.min(dim, x.numElements())
+          var j = 0
+          while (j < nSub) {
+            if (!codes.isNullAt(j)) {
+              val cell = codes.getInt(j)
+              if (cell < 0 || cell >= ksub)
+                throw new IllegalArgumentException(
+                  s"TrainFold: code $cell of sub-space $j outside [0, $ksub)")
+              var i = 0
+              while (i < n) {
+                if (!x.isNullAt(i)) {
+                  s((i * m + j) * ksub + cell) +=
+                    math.floor(x.getFloat(i).toDouble * 1e9).toLong
                 }
+                i += 1
               }
-              j += 1
             }
+            j += 1
           }
         }
         s
-      })
-    val s = new Array[Long](dim * m * ksub)
-    partials.foreach { p =>
-      var i = 0
-      while (i < s.length) { s(i) += p(i); i += 1 }
-    }
+      },
+      (_: Int, p: Array[Long]) => addInto(s, p))
     s
+  }
+
+  private def requireRow(row: InternalRow): Unit =
+    if (row.isNullAt(0) || row.isNullAt(1))
+      throw new IllegalArgumentException(
+        "TrainFold: null key or vector row (filter null vectors before training)")
+
+  /** `acc += part`, element-wise. Called by the scheduler's result
+    * handler, one partition result at a time. */
+  private def addInto(acc: Array[Long], part: Array[Long]): Unit = {
+    var i = 0
+    while (i < acc.length) { acc(i) += part(i); i += 1 }
   }
 }

@@ -178,6 +178,19 @@ class StagingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("stg4").toString
     intercept[IllegalStateException](Staging.validate(spark, dir))
   }
+
+  test("a lost part file fails validation, naming the dir and both counts (F3)") {
+    val dir = Files.createTempDirectory("stg5").toString
+    assert(Staging.stage(spark.range(0, 100, 1, 4).toDF("id"), dir) == 100)
+    val parts = graft.LocalDirs.list(Staging.dataDir(dir))
+      .filter(_.getFileName.toString.startsWith("part-")).sorted
+    assert(parts.size == 4)
+    Files.delete(parts.head)
+    val e = intercept[IllegalStateException](Staging.validate(spark, dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("75 rows") &&
+      e.getMessage.contains("says 100"), e.getMessage)
+    Staging.cleanup(dir)
+  }
 }
 
 class PublishSpec extends SparkSpec {
@@ -270,10 +283,48 @@ class PublishSpec extends SparkSpec {
 
   test("temp-swap publish replaces data dir (E2)") {
     val root = Files.createTempDirectory("pub4").toString
-    Publish.tempSwapPublish(Tables(spark, sf(), "region"), root, "t")
+    val stg = Files.createTempDirectory("pub4_stg").toString
+    Staging.stage(Tables(spark, sf(), "region"), stg)
+    Publish.tempSwapPublish(Staging.dataDir(stg), root, "t")
     assert(spark.read.parquet(s"$root/t/data").count() == 5)
-    Publish.tempSwapPublish(Tables(spark, sf(), "nation"), root, "t")
+    Staging.stage(Tables(spark, sf(), "nation"), stg)
+    Publish.tempSwapPublish(Staging.dataDir(stg), root, "t")
     assert(spark.read.parquet(s"$root/t/data").count() == 25)
+    Staging.cleanup(stg)
+  }
+
+  test("a linked snapshot survives re-staging and cleanup; temp dirs are not versions") {
+    val root = Files.createTempDirectory("pub5").toString
+    val stg = Files.createTempDirectory("pub5_stg").toString
+    val v = "2024_03_01_00_00_00"
+    // a crashed fill of the same version leaves its hidden temp dir behind
+    val leftover = java.nio.file.Paths.get(root, "t", s".v=$v.tmp")
+    Files.createDirectories(leftover)
+    assert(Publish.listVersions(root, "t").isEmpty)
+    Staging.stage(Tables(spark, sf(), "nation"), stg)
+    Publish.linkSnapshot(Staging.dataDir(stg), root, "t", v)
+    Publish.publishVersion(root, "t", v)
+    assert(!Files.exists(leftover))
+    val published = PublishSpec.fingerprint(Publish.readCurrent(spark, root, "t"))
+    assert(published == PublishSpec.fingerprint(Staging.read(spark, stg)))
+    assert(published._1 == 25)
+    // overwrite the staged files with other rows, then drop them
+    Staging.stage(Tables(spark, sf(), "nation").filter("n_nationkey < 5"), stg)
+    Staging.cleanup(stg)
+    assert(PublishSpec.fingerprint(Publish.readCurrent(spark, root, "t")) == published)
+    assert(Publish.listVersions(root, "t") == Seq(v))
+  }
+}
+
+object PublishSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  /** Row count and an order-independent content hash. */
+  def fingerprint(df: DataFrame): (Long, BigDecimal) = {
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.toIndexedSeq.map(col): _*).cast("decimal(38,0)"))).head()
+    (r.getLong(0), if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
   }
 }
 
@@ -399,6 +450,48 @@ class CopyJobSpec extends SparkSpec {
     // distinct versions need distinct seconds; run() stamps per-run
     (1 to 3).foreach { _ => assert(CopyJob.run(spark, cfg) == Copied); Thread.sleep(1100) }
     assert(Publish.listVersions(cfg.targetRoot, "r_out").size <= 2)
+  }
+
+  test("a run over N plain tables takes at most 3N Spark jobs") {
+    val names = Seq("nation", "region", "supplier", "customer")
+    val cfg = freshCfg(names.map(n => TableSpec(n, FromSpec(n), s"${n}_jobs")))
+    val sc = spark.sparkContext
+    // count only this thread's jobs: the group is a thread-local property
+    val group = "copyjob-job-count"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && group == j.properties.getProperty("spark.jobGroup.id")) {
+          jobs.add(String.valueOf(j.properties.getProperty("spark.job.description"))); ()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one CopyJob.run")
+    try assert(CopyJob.run(spark, cfg) == Copied)
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.size <= 3 * names.size,
+      s"${jobs.size} jobs for ${names.size} tables: ${jobs.toArray.mkString(" | ")}")
+    names.foreach(n => assert(Publish.readCurrent(spark, cfg.targetRoot, s"${n}_jobs").count() > 0))
+  }
+
+  test("staging and target on different file systems publish by copy") {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    assume(Files.isDirectory(shm) && Files.isWritable(shm), "needs a writable /dev/shm")
+    val stagingRoot = Files.createTempDirectory(shm, "stg_xfs")
+    val base = Files.createTempDirectory("job_xfs")
+    try {
+      assume(Files.getFileStore(stagingRoot) != Files.getFileStore(base),
+        "/dev/shm and the temp dir share a file system")
+      val cfg = JobConfig(Seq(TableSpec("nation", FromSpec("nation"), "nation_xfs")),
+        sf(), stagingRoot.toString, s"$base/target", s"$base/state")
+      assert(CopyJob.run(spark, cfg) == Copied)
+      assert(PublishSpec.fingerprint(Publish.readCurrent(spark, cfg.targetRoot, "nation_xfs")) ==
+        PublishSpec.fingerprint(Staging.applyAutoTrim(Tables(spark, sf(), "nation"))))
+    } finally graft.LocalDirs.deleteRecursively(stagingRoot)
   }
 
   test("temp-swap publish mode (E2)") {

@@ -116,6 +116,34 @@ class TrainFoldSpec extends SparkSpec {
     assert(got.toSeq == exp.toSeq)
   }
 
+  test("keyedFixedPointSums fails on a null vector row instead of skipping it") {
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("vec",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
+    val rows = java.util.Arrays.asList(
+      org.apache.spark.sql.Row(0, Seq(1.0f, 2.0f)),
+      org.apache.spark.sql.Row(1, null))
+    val e = intercept[Exception](TrainFold.keyedFixedPointSums(
+      spark.createDataFrame(rows, schema), nKeys = 2, dim = 2))
+    assert(TrainFoldSpec.messages(e).contains("null key or vector row"), TrainFoldSpec.messages(e))
+  }
+
+  test("codesCrossSums fails on a code outside [0, ksub)") {
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("codes",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.IntegerType)),
+      org.apache.spark.sql.types.StructField("x",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
+    val rows = java.util.Arrays.asList(
+      org.apache.spark.sql.Row(Seq(0, 1), Seq(1.0f, 2.0f)),
+      org.apache.spark.sql.Row(Seq(1, 4), Seq(1.0f, 2.0f)))
+    val e = intercept[Exception](TrainFold.codesCrossSums(
+      spark.createDataFrame(rows, schema), m = 2, ksub = 4, dim = 2))
+    assert(TrainFoldSpec.messages(e).contains("code 4 of sub-space 1 outside [0, 4)"),
+      TrainFoldSpec.messages(e))
+  }
+
   test("trainOpq init fusion: initVecs path == the per-train collected init") {
     // the driver-rotated init must match what train() would collect from
     // the rotated relation itself — same rows, same MatVecFloat floats
@@ -137,4 +165,11 @@ class TrainFoldSpec extends SparkSpec {
     assert(viaInit.centroids.flatten.flatten.toSeq ==
       viaCollect.centroids.flatten.flatten.toSeq)
   }
+}
+
+object TrainFoldSpec {
+  /** The messages along an exception's cause chain: a task's exception
+    * reaches the driver wrapped in a job-failure exception. */
+  def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" <- ")
 }
